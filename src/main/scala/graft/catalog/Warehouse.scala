@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Relational
 
@@ -15,7 +16,8 @@ import graft.operators.Relational
   *  - table registration with PK/FK metadata (DDL constraints are
   *    informational in Spark; enforcement happens at load time via
   *    validation queries, replacing DuckDB's INSERT-time checks),
-  *  - insert-select loading (`load_ldf`, build_db.py:72-84),
+  *  - insert-select loading (`load_ldf`, build_db.py:72-84) that stores
+  *    each validated table's rows once, as the INSERT does,
   *  - schema introspection (information_schema.columns shape,
   *    build_db.py:55-69) and preview (LIMIT 5, build_db.py:86-92),
   *  - whole-database export (EXPORT DATABASE, build_db.py:1423) as
@@ -23,8 +25,12 @@ import graft.operators.Relational
   *  - schema-doc export with PK/FK classification
   *    (build_db.md:1444-1461 → docs/schema.csv).
   *
-  * Catalog calls (`spark.catalog.*`) never launch jobs; preview runs
-  * one CollectLimitExec job; export runs one write job per table.
+  * Registration, introspection and a `validate = false` load launch no
+  * jobs. A validated load runs the jobs of its frame's own shuffles and
+  * one job that fills the store, then one count action per constraint
+  * over the stored rows. Preview runs one CollectLimitExec job; export
+  * runs one write job per table, which reads a validated table's stored
+  * rows, not its sources.
   */
 object Warehouse {
 
@@ -39,19 +45,35 @@ object Warehouse {
   private val registry =
     scala.collection.concurrent.TrieMap.empty[String, TableMeta]
 
+  /** The persisted frame of every table a validated [[load]] stored. */
+  private val stored =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
   def meta(name: String): Option[TableMeta] = registry.get(name)
 
   /** Register a frame as a named table with constraint metadata and
     * validate the constraints — the Spark form of DuckDB's constrained
     * `INSERT INTO t SELECT * FROM ldf`. Returns violations (empty =
-    * the load would have succeeded in the reference engine). */
+    * the load would have succeeded in the reference engine).
+    *
+    * A validated load stores the rows once, as the INSERT does: the
+    * frame is persisted (MEMORY_AND_DISK), the first check's read fills
+    * the store, and the PK check and each FK check (against the parent's
+    * stored rows) read the stored rows. Later reads — child tables' FK
+    * checks, [[exportDatabase]], a child build that embeds this frame —
+    * are served the stored rows too, so a change to the sources is not
+    * seen until the tables are loaded again: re-loading a name, or
+    * [[clear]], drops the stored rows. `validate = false` only
+    * registers the lazy view and launches no job. */
   def load(spark: SparkSession, df: DataFrame, m: TableMeta,
       validate: Boolean = true): Seq[ConstraintViolation] = {
+    stored.remove(m.name).foreach(_.unpersist())
     df.createOrReplaceTempView(m.name)
     registry.put(m.name, m)
     refreshInformationSchema(spark)
     if (!validate) Nil
     else {
+      stored.put(m.name, df.persist(StorageLevel.MEMORY_AND_DISK))
       val pkViol =
         if (m.pk.isEmpty) Nil
         else {
@@ -416,6 +438,11 @@ object Warehouse {
     env.crossJoin(broadcast(approxRow)).select(outCols: _*)
   }
 
-  /** Reset registry (test isolation). */
-  def clear(): Unit = registry.clear()
+  /** Reset the registry and drop every stored table's rows (test and
+    * pass isolation). */
+  def clear(): Unit = {
+    stored.values.foreach(_.unpersist())
+    stored.clear()
+    registry.clear()
+  }
 }

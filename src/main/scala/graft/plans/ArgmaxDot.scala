@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   *    -0.0 == 0.0), score ties resolved to the larger index — the
   *    struct's (score, index) lexicographic max.
   */
-case class ArgmaxDot(child: Expression, codewords: Array[Array[Double]],
+final case class ArgmaxDot(child: Expression, codewords: Array[Array[Double]],
     halfNorms: Array[Double], offset: Int, len: Int)
     extends UnaryExpression {
 

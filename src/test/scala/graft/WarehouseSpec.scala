@@ -1,11 +1,54 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.functions.{sum, udf}
+import org.apache.spark.storage.StorageLevel
+
 import graft.catalog.Warehouse
-import graft.catalog.Warehouse.{FkEdge, TableMeta}
+import graft.catalog.Warehouse.{ConstraintViolation, FkEdge, TableMeta}
+import graft.etl.WorldCup
+import graft.operators.Relational
 import graft.sources.Tables
 
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `body`'s result with the jobs it started and the input bytes its
+    * tasks read (source files, and stored blocks it was served). */
+  private def measured[T](body: => T): (T, Int, Long) = {
+    val jobs = new AtomicInteger
+    val bytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.inputMetrics.bytesRead))
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Bytes of every stored (persisted) block in the session. */
+  private def storedBytes: Long =
+    spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+
+  private def tempDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  private def deleteRecursively(p: Path): Unit =
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(f => Files.delete(f))
 
   private def loadStar(): Unit = {
     Warehouse.clear()
@@ -158,5 +201,103 @@ class WarehouseSpec extends SparkSpec {
       ("id", "bigint", 3L, 0L, 3L),
       ("s", "string", 3L, 1L, 1L),   // countDistinct ignores NULL
       ("v", "double", 3L, 1L, 1L)))
+  }
+
+  test("a validated load computes its lineage once; the export reads no source") {
+    Warehouse.clear()
+    spark.catalog.clearCache()
+    val dir = tempDir("graft-store")
+    (0 until 40).map(i => (i.toLong, s"p$i")).toDF("id", "name")
+      .write.parquet(s"$dir/parent")
+    (0 until 4000).map(i => (i.toLong, (i % 40).toLong, i * 0.5))
+      .toDF("id", "parent_id", "v").write.parquet(s"$dir/child")
+    // the child's build counts the rows it computes, then shuffles
+    val computed = spark.sparkContext.longAccumulator("child rows computed")
+    val counted = udf { (id: Long) => computed.add(1); id }.asNondeterministic()
+    val child = spark.read.parquet(s"$dir/child").withColumn("id", counted($"id"))
+      .groupBy($"id", $"parent_id").agg(sum($"v").as("v"))
+    assert(Warehouse.load(spark, spark.read.parquet(s"$dir/parent"),
+      TableMeta("parent", pk = Seq("id"))).isEmpty)
+    assert(Warehouse.load(spark, child, TableMeta("child", pk = Seq("id"),
+      fks = Seq(FkEdge(Seq("parent_id"), "parent", Seq("id"))))).isEmpty)
+    // the PK and FK checks ran, but the lineage only once
+    assert(computed.value == 4000L)
+    val stored = storedBytes
+    assert(stored > 0)
+    // every byte the export reads is a stored block, none a source
+    // byte: it even succeeds once the sources are gone
+    deleteRecursively(Paths.get(dir))
+    val out = tempDir("graft-store-out")
+    val (_, _, exportBytes) = measured(Warehouse.exportDatabase(spark, out))
+    assert(exportBytes == stored)
+    assert(computed.value == 4000L)
+    assert(spark.read.parquet(s"$out/child.parquet").count() == 4000)
+  }
+
+  test("validate = false launches no job") {
+    Warehouse.clear()
+    val df = Tables.load(spark, sf(), "orders")
+    val (viol, jobs, _) = measured(Warehouse.load(spark, df,
+      TableMeta("orders", pk = Seq("o_orderkey")), validate = false))
+    assert(viol.isEmpty)
+    assert(jobs == 0)
+    assert(df.storageLevel == StorageLevel.NONE)
+  }
+
+  test("clear() drops every stored table") {
+    spark.catalog.clearCache()
+    loadStar()
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    Warehouse.clear()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("re-loading a name unpersists the frame it replaces") {
+    Warehouse.clear()
+    val first = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    Warehouse.load(spark, first, TableMeta("reloaded", pk = Seq("id")))
+    assert(first.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    val second = Seq((3L, "c")).toDF("id", "v")
+    Warehouse.load(spark, second, TableMeta("reloaded", pk = Seq("id")))
+    assert(first.storageLevel == StorageLevel.NONE)
+    assert(second.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(spark.table("reloaded").as[(Long, String)].collect().toSeq ==
+      Seq((3L, "c")))
+  }
+
+  test("a cleared and re-run loadAll sees a rewritten source CSV") {
+    val fixtures = Paths.get(getClass.getResource("/worldcup").toURI)
+    val dir = Files.createTempDirectory("graft-wc")
+    Files.list(fixtures).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".csv"))
+      .foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    def ids = spark.table("confederation").select("id").as[String].collect().toSet
+    Warehouse.clear()
+    assert(WorldCup.loadAll(spark, dir.toString).isEmpty)
+    val before = ids
+    Files.writeString(dir.resolve("confederations.csv"),
+      "CONF-99,TST,Test Confederation,wiki/TST\n", StandardOpenOption.APPEND)
+    Warehouse.clear()
+    assert(WorldCup.loadAll(spark, dir.toString).isEmpty)
+    assert(!before("CONF-99"))
+    assert(ids == before + "CONF-99")
+    Warehouse.clear()
+    deleteRecursively(dir)
+  }
+
+  test("a PK and two FKs: only the violated FK reports, with its own count") {
+    Warehouse.clear()
+    Warehouse.load(spark, Seq(1L, 2L).toDF("id"), TableMeta("pa", pk = Seq("id")))
+    Warehouse.load(spark, Seq("x", "y").toDF("code"), TableMeta("pb", pk = Seq("code")))
+    // a_id (INT) against pa.id (BIGINT) all match; b_code orphans are
+    // rows 2, 3 and 5, and row 4's NULL satisfies the FK
+    val child = Seq[(Long, Int, String)]((1L, 1, "x"), (2L, 2, "z"), (3L, 1, "w"),
+      (4L, 2, null), (5L, 1, "z")).toDF("id", "a_id", "b_code")
+    val viol = Warehouse.load(spark, child, TableMeta("c", pk = Seq("id"),
+      fks = Seq(FkEdge(Seq("a_id"), "pa", Seq("id")),
+        FkEdge(Seq("b_code"), "pb", Seq("code")))))
+    assert(viol == Seq(ConstraintViolation("c", "FOREIGN KEY", "b_code -> pb", 3L)))
+    assert(Relational.fkOrphans(child, spark.table("pb"), Seq("b_code" -> "code"))
+      .count() == 3L)
   }
 }
